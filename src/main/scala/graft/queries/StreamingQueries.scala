@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming queries under the DRIVER contract (not just specs): each
@@ -15,28 +15,37 @@ import org.apache.spark.sql.functions._
 object StreamingQueries {
 
   // memory-sink names must be unique per invocation (Bench runs each
-  // query several times in one session); the PREVIOUS invocation's
-  // sink table is dropped so repeated runs don't accumulate results
-  // in driver memory
+  // query several times in one session)
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val lastSink = new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastSink67 = new java.util.concurrent.atomic.AtomicReference[String](null)
+  /** sink prefix → the latest invocation's sink table, owned by
+    * [[drain]] */
+  private val lastSinks =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The shared memory-sink drain protocol: unique sink name, start →
     * processAllAvailable → stop, then swap-and-drop the PREVIOUS
-    * invocation's sink table (Bench runs each query several times in
-    * one session — without the drop, results accumulate in driver
-    * memory). Returns the drained sink table. q67 keeps its own copy
-    * because its drain also toggles/restores the noDataMicroBatches
-    * conf inside the same try/finally. */
+    * invocation's sink table for the same prefix (Bench runs each
+    * query several times in one session — without the drop, results
+    * accumulate in driver memory). Returns the drained sink table.
+    * `noDataBatches = false` disables no-data micro-batches for this
+    * run (the session conf is restored afterwards): a drain whose
+    * watermark can evict nothing the answer depends on skips the
+    * extra batch that only advances it. */
   private def drain(s: SparkSession, out: DataFrame, prefix: String,
-      ref: java.util.concurrent.atomic.AtomicReference[String],
-      mode: String): DataFrame = {
+      mode: String, noDataBatches: Boolean = true): DataFrame = {
     val name = s"${prefix}_${runSeq.incrementAndGet()}"
-    val q = out.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    try q.processAllAvailable() finally q.stop()
-    val prev = ref.getAndSet(name)
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val noDataPrev = s.conf.getOption(noDataKey)
+    if (!noDataBatches) s.conf.set(noDataKey, "false")
+    try {
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode(mode).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally if (!noDataBatches) noDataPrev match {
+      case Some(v) => s.conf.set(noDataKey, v)
+      case None    => s.conf.unset(noDataKey)
+    }
+    val prev = lastSinks.put(prefix, name)
     if (prev != null) s.catalog.dropTempView(prev)
     s.table(name)
   }
@@ -82,7 +91,7 @@ object StreamingQueries {
         .select(
           date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
           $"event_type", $"n")
-      drain(s, agg, "q62_stream_out", lastSink, "complete")
+      drain(s, agg, "q62_stream_out", "complete")
         .orderBy($"window_start", $"event_type")
     }
   }
@@ -120,26 +129,12 @@ object StreamingQueries {
       val joined = graft.streaming.Correlate
         .stream(purchases, errors, windowSec = 60)
         .select($"p_event", $"e_event")
-      val name = s"q67_stream_out_${runSeq.incrementAndGet()}"
       // the drain needs no no-data micro-batch: an inner join emits on
       // the data batch; the extra batch only advances the watermark to
       // EVICT state — a full scan of both join state stores (~800k
       // rows here) that the about-to-stop query never benefits from
-      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val noDataPrev = s.conf.getOption(noDataKey)
-      s.conf.set(noDataKey, "false")
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        noDataPrev match {
-          case Some(v) => s.conf.set(noDataKey, v)
-          case None    => s.conf.unset(noDataKey)
-        }
-      }
-      val prev = lastSink67.getAndSet(name)
-      if (prev != null) s.catalog.dropTempView(prev)
-      s.table(name).orderBy($"p_event", $"e_event")
+      drain(s, joined, "q67_stream_out", "append", noDataBatches = false)
+        .orderBy($"p_event", $"e_event")
     }
   }
 
@@ -179,18 +174,13 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val pairs = graft.streaming.NearDup.pairs(stream, maxHamming = 6)
     graft.streaming.NearDup
-      .distinctPairs(drain(s, pairs, "q72_stream_out", lastSink72,
-        "append"))
+      .distinctPairs(drain(s, pairs, "q72_stream_out", "append"))
       .orderBy($"id_a", $"id_b")
   }
-
-  private val lastSink72 = new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Batch oracle: the drained stream ≡ the batch portable-SimHash
     * pipeline (q28's replay). */
   val q72Sql: String = TrainingData.q28Sql
-
-  private val lastSink89 = new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** q89: STREAMING CARDINALITY MONITOR — per-hour per-type distinct
     * user estimates from a KMV sketch aggregated IN the stream
@@ -218,21 +208,48 @@ object StreamingQueries {
             .as("window_start"),
           $"event_type",
           graft.operators.Sketches.kmvEstimate("sketch", 16).as("est_users"))
-      drain(s, agg, "q89_stream_out", lastSink89, "complete").orderBy($"window_start", $"event_type")
+      drain(s, agg, "q89_stream_out", "complete").orderBy($"window_start", $"event_type")
     }
   }
 
-  private val lastSink97 = new java.util.concurrent.atomic.AtomicReference[String](null)
+  /** Dials that cover the whole feed for the three monitor queries
+    * (q97, q112, q118): 20 years of retention, observation window and
+    * allowed lateness. Over a feed spanning less than that, the
+    * bounded operators never prune, close a window or drop a late
+    * event, so each drained answer equals its batch oracle under ANY
+    * batching of the feed, not only the one-file batch the file
+    * source delivers. */
+  private[graft] val FeedSpan = java.time.Duration.ofDays(7300)
+
+  /** q97's operator with its dials: `(user_id, ts, step)` → funnel
+    * snapshots. */
+  private[graft] def q97Monitor(ev: DataFrame)
+      : Dataset[graft.streaming.FunnelStream.Snap] =
+    graft.streaming.FunnelStream.funnel(ev, Analytics.FunnelSteps.size,
+      window = FeedSpan, allowedLateness = FeedSpan)
+
+  /** q112's operator with its dials: `(key, m)` → z-score rows. */
+  private[graft] def q112Monitor(ev: DataFrame)
+      : Dataset[graft.streaming.AnomalyStream.ZRow] =
+    graft.streaming.AnomalyStream.zScores(ev, trailing = 30,
+      keepMinutes = FeedSpan.toMinutes)
+
+  /** q118's operator with its dials: `(key, w, qv, ts)` → quantile
+    * rows. */
+  private[graft] def q118Monitor(ev: DataFrame)
+      : Dataset[graft.streaming.QuantileStream.QRow] =
+    graft.streaming.QuantileStream.quantiles(ev, pcts = Seq(50, 95),
+      allowedLateness = FeedSpan)
 
   /** q97: STREAMING FUNNEL — q93's ordered-step matching maintained
     * live per user ([[graft.streaming.FunnelStream]]: buffered-events
-    * state, per-batch greedy re-match, progress-stream emissions).
-    * Consumers take the max-`n_seen` snapshot per user — done here
-    * with `max_by`, robust to multi-batch delivery; the drained
-    * single-batch run reproduces the batch funnel EXACTLY, so q93's
-    * oracle gates the streaming plan (the q72 ↔ q28 convention).
-    * Same step sequence and observation window as q93 — shared
-    * constants, so the two cannot drift apart silently. */
+    * state, per-batch greedy re-match, progress-stream emissions)
+    * with the [[FeedSpan]] dials. Consumers take the max-`n_seen`
+    * snapshot per user — done here with `max_by`, robust to
+    * multi-batch delivery; the drained run reproduces the batch funnel
+    * EXACTLY, so q93's oracle gates the streaming plan (the q72 ↔ q28
+    * convention). Same step sequence and observation end as q93 —
+    * shared constants, so the two cannot drift apart silently. */
   def q97StreamFunnel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withNanosFlag(s) {
@@ -242,11 +259,11 @@ object StreamingQueries {
       val ev = eventsStream(s, dir)
         .filter($"ts" < lit(Analytics.FunnelEnd).cast("timestamp"))
         .filter($"event_type".isin(steps: _*))
-        .select($"user_id", expr("unix_micros(ts)").as("ts_us"),
-          stepIdx.as("step"))
-      val snaps = graft.streaming.FunnelStream.funnel(ev, steps.size)
-      val latest = drain(s, snaps.toDF(), "q97_stream_out", lastSink97,
-          "append")
+        .select($"user_id", $"ts", stepIdx.as("step"))
+      // no window can close under the FeedSpan dials: skip the no-data
+      // batch the advancing watermark would otherwise schedule
+      val latest = drain(s, q97Monitor(ev).toDF(), "q97_stream_out",
+          "append", noDataBatches = false)
         .groupBy($"user_id")
         .agg(max_by(struct($"ts", $"depth"), $"n_seen").as("f"))
         .filter($"f.depth" >= 1) // funnel entrants only, as in batch
@@ -262,13 +279,12 @@ object StreamingQueries {
   /** The drained stream ≡ the batch funnel — q93's oracle. */
   val q97Sql: String = Analytics.q93Sql
 
-  private val lastSink112 = new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** q112: streaming rate-anomaly monitor — the live twin of q100's
-    * dense-spine z-scores ([[graft.streaming.AnomalyStream]]). Each
-    * key re-emits its full scored series per batch tagged `seen`;
-    * the consumer keeps the max-`seen` emission per key, so the
-    * drained run is EXACTLY the batch answer — q100's oracle. */
+    * dense-spine z-scores ([[graft.streaming.AnomalyStream]] with the
+    * [[FeedSpan]] retention). Each key re-emits its full scored series
+    * per batch tagged `seen`; the consumer keeps the max-`seen`
+    * emission per key, so the drained run is EXACTLY the batch answer
+    * — q100's oracle. */
   def q112StreamAnomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withNanosFlag(s) {
@@ -277,8 +293,7 @@ object StreamingQueries {
         .select($"event_type".as("key"),
           expr("unix_micros(date_trunc('MINUTE', ts)) div 60000000")
             .as("m"))
-      val out = graft.streaming.AnomalyStream.zScores(ev, trailing = 30)
-      drain(s, out.toDF(), "q112_stream_out", lastSink112, "append")
+      drain(s, q112Monitor(ev).toDF(), "q112_stream_out", "append")
         .groupBy($"key", $"m")
         .agg(max_by(struct($"n", $"z"), $"seen").as("f"))
         .select($"key",
@@ -293,13 +308,12 @@ object StreamingQueries {
     * oracle. */
   val q112Sql: String = Analytics.q100Sql
 
-  private val lastSink118 = new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** q118: streaming windowed value quantiles — the live twin of
-    * q117's exact rank selection ([[graft.streaming.QuantileStream]]).
-    * Each (key, hour) group re-emits its pct set per batch tagged
-    * `seen`; the consumer keeps the max-`seen` rows, so the drained
-    * run is EXACTLY the batch answer — q117's oracle verbatim. */
+    * q117's exact rank selection ([[graft.streaming.QuantileStream]]
+    * with the [[FeedSpan]] lateness). Each (key, hour) group re-emits
+    * its pct set per batch tagged `seen`; the consumer keeps the
+    * max-`seen` rows, so the drained run is EXACTLY the batch answer
+    * — q117's oracle verbatim. */
   def q118StreamQuantiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withNanosFlag(s) {
@@ -313,10 +327,12 @@ object StreamingQueries {
           expr("(unix_micros(ts) - pmod(unix_micros(ts), 3600000000))" +
             " div 1000000").as("w"),
           graft.operators.WindowedQuantiles.quantizedValue($"value")
-            .as("qv"))
-      val out = graft.streaming.QuantileStream.quantiles(ev,
-        pcts = Seq(50, 95))
-      drain(s, out.toDF(), "q118_stream_out", lastSink118, "append")
+            .as("qv"),
+          $"ts")
+      // no window can close under the FeedSpan dials: skip the no-data
+      // batch the advancing watermark would otherwise schedule
+      drain(s, q118Monitor(ev).toDF(), "q118_stream_out", "append",
+          noDataBatches = false)
         .groupBy($"key", $"w", $"pct")
         .agg(max_by(struct($"n", $"est"), $"seen").as("f"))
         .select($"key",
@@ -331,8 +347,6 @@ object StreamingQueries {
   /** The drained stream ≡ the batch exact rank selection — q117's
     * oracle. */
   val q118Sql: String = Behavior.q117Sql
-
-  private val lastSink125 = new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** q125: streaming heavy hitters — SpaceSaving summaries per hash
     * shard ([[graft.streaming.HeavyHitterStream]]), the live twin of
@@ -357,15 +371,13 @@ object StreamingQueries {
       val out = graft.streaming.HeavyHitterStream.topKeys(ev,
         capacity = 512)
       val emitted =
-        drain(s, out.toDF(), "q125_stream_out", lastSink125, "append")
+        drain(s, out.toDF(), "q125_stream_out", "append")
       graft.streaming.HeavyHitterStream.latestSnapshot(emitted)
         .filter($"n" >= 60)
         .select($"key".as("user_id"), $"n")
         .orderBy($"user_id")
     }
   }
-
-  private val lastSink139 = new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** q139: GLOBAL top-k readout over the streaming SpaceSaving shards
     * ([[graft.streaming.HeavyHitterStream.globalTopK]]) — q125 gates
@@ -385,7 +397,7 @@ object StreamingQueries {
       val out = graft.streaming.HeavyHitterStream.topKeys(ev,
         capacity = 512)
       val emitted =
-        drain(s, out.toDF(), "q139_stream_out", lastSink139, "append")
+        drain(s, out.toDF(), "q139_stream_out", "append")
       graft.streaming.HeavyHitterStream.globalTopK(emitted, k = 20)
         .select($"key".as("user_id"), $"n", $"err", $"rank")
         .orderBy($"rank")
@@ -439,8 +451,6 @@ object StreamingQueries {
     * — q127's oracle verbatim. */
   val q142Sql: String = Analytics.q127Sql
 
-  private val lastSink144 = new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** q144: STREAMING decontamination monitor — a STREAM-STATIC join,
     * the one streaming join class §2.9 had not yet exercised (q67 is
     * stream-stream): incoming docs' hashed 8-grams
@@ -482,23 +492,21 @@ object StreamingQueries {
       .join(bench, Seq("gram_h")) // stream-static inner join
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_leaked"))
-    drain(s, hits, "q144_stream_out", lastSink144, "complete")
+    drain(s, hits, "q144_stream_out", "complete")
       .orderBy($"doc_id")
   }
 
-  private val lastSink149 = new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  /** q149: the BOUNDED-STATE twin of q144 (the TTL-twin discipline,
-    * q97/q112/q118, pointed at the decon monitor): q144's complete-
+  /** q149: the BOUNDED-STATE form of q144 (the bounded-monitor
+    * discipline of q97/q112/q118, pointed at the decon monitor): q144's complete-
     * mode leak counter holds one state row per flagged doc FOREVER —
-    * fine over a benchmark, unbounded on a live feed. This twin gives
+    * fine over a benchmark, unbounded on a live feed. This form gives
     * each doc an ingestion timestamp, counts leaks per (1-day window,
     * doc) under a watermark in APPEND mode, and lets the ENGINE evict
     * each day's groups when the watermark passes — state is O(docs in
     * open windows), not O(flagged docs ever).
     *
     * SHAPE CHOICE, stated: the fMGWS tombstone contract
-    * ([[graft.streaming.AnomalyStreamTtl]]) exists for entities a
+    * ([[graft.streaming.AnomalyStream]]) exists for entities a
     * stream REVISITS across batches (a funnel user, a rate key) —
     * a document is one-shot (its grams explode from one row), so the
     * idiomatic bounded form is the built-in watermarked window
@@ -536,7 +544,7 @@ object StreamingQueries {
       .groupBy(window($"ts", "1 day"), $"doc_id")
       .agg(count(lit(1)).as("n_leaked"))
       .select($"doc_id", $"n_leaked")
-    drain(s, hits, "q149_stream_out", lastSink149, "append")
+    drain(s, hits, "q149_stream_out", "append")
       .orderBy($"doc_id")
   }
 

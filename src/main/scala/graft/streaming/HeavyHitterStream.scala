@@ -8,12 +8,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   * "Efficient computation of frequent and top-k elements in data
   * streams", see PAPERS.md) summaries maintained per hash-shard in
   * `flatMapGroupsWithState`: the live twin of the batch Count-Min
-  * prune-then-verify (q115/q122), and the first streaming family
-  * whose EXACT deployment variant needs no TTL twin — the state IS
+  * prune-then-verify (q115/q122), and the streaming family whose
+  * exact deployment needs no retention or close dials — the state IS
   * the sketch, O(capacity) per shard BY CONSTRUCTION, so unbounded
-  * key cardinality can never grow it (contrast
-  * [[AnomalyStreamTtl]]/[[FunnelStreamTtl]], where boundedness had
-  * to be added to an exact-state twin).
+  * key cardinality can never grow it (contrast [[AnomalyStream]] /
+  * [[FunnelStream]], whose state is bounded by `keepMinutes` /
+  * `window` and the watermark).
   *
   * SHARDING: the caller keys each event by a deterministic hash
   * shard (`pmod(xxhash64(key), nShards)`). A key lives in EXACTLY

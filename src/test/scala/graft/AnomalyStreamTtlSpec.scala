@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.{AnomalyStream, AnomalyStreamTtl}
-import graft.streaming.AnomalyStream.MinuteEvent
-import graft.streaming.AnomalyStreamTtl.TtlState
+import graft.streaming.AnomalyStream
+import graft.streaming.AnomalyStream.{KeyState, MinuteEvent}
 import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -18,32 +17,67 @@ class AnomalyStreamTtlSpec extends SparkSpec {
       .select($"key", $"m", $"f.n".as("n"), $"f.z".as("z"))
       .as[(String, Long, Long, Option[Double])].collect().toSet
 
-  test("TTL variant with generous bounds is IDENTICAL to the exact " +
-      "twin across multi-batch late-event re-scoring") {
+  /** Batch reference: q100's dense-spine z-scores over (key, minute)
+    * events, as (key, m, n, z). */
+  private def batchZ(events: Seq[(String, Long)], trailing: Int) =
+    graft.operators.Anomaly.rateZScores(
+        events.map { case (k, m) => (k, new java.sql.Timestamp(m * 60000L)) }
+          .toDF("key", "ts"),
+        "key", "ts", trailing = trailing)
+      .select($"key",
+        expr("unix_micros(minute_start) div 60000000").as("m"),
+        $"n", $"z")
+      .as[(String, Long, Long, Option[Double])].collect().toSet
+
+  /** Drains `batches` through `mk` one micro-batch each; returns the
+    * max-`seen` rows. */
+  private def drainBatches(name: String, batches: Seq[Seq[(String, Long)]],
+      mk: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.Dataset[AnomalyStream.ZRow]) = {
     implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Long)]
+    val q = mk(input.toDF().toDF("key", "m")).toDF()
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    maxSeen(name)
+  }
+
+  test("generous bounds: drained output ≡ the batch z-scores across " +
+      "multi-batch late-event re-scoring") {
     val b1 = Seq(0L -> 2, 1L -> 3, 2L -> 2, 4L -> 3, 5L -> 2)
       .flatMap { case (m, c) => Seq.fill(c)(("A", m)) }
-    val b2 = Seq.fill(4)(("A", 2L)) ++ Seq(("A", 6L), ("A", 6L), ("A", 7L))
+    // late events for minute 2 AND below the key's first minute
+    val b2 = Seq.fill(4)(("A", 2L)) ++ Seq(("A", -2L), ("A", 6L),
+      ("A", 6L), ("A", 7L))
+    val got = drainBatches("bounded_eq_batch", Seq(b1, b2),
+      ev => AnomalyStream.zScores(ev, trailing = 3, keepMinutes = 10000L))
+    val batch = batchZ(b1 ++ b2, trailing = 3)
+    assert(got === batch, s"got=$got\nbatch=$batch")
+    assert(got.exists(_._2 == 1L), "the below-first-minute event must " +
+      "extend the scored span")
+  }
 
-    def run(name: String, mk: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.Dataset[AnomalyStream.ZRow]) = {
-      val input = MemoryStream[(String, Long)]
-      val q = mk(input.toDF().toDF("key", "m")).toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        input.addData(b1: _*); q.processAllAvailable()
-        input.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      maxSeen(name)
+  test("q112's dials keep the drained monitor exact over a shuffled " +
+      "multi-batch feed spanning 30 days") {
+    // two keys, activity every ~40 minutes over 30 days (> the
+    // operator's 7-day default retention), delivered in 4 shuffled
+    // batches so late events land below each key's first minute
+    val rnd = new scala.util.Random(112)
+    val events = (0L until 1080L).flatMap { i =>
+      val m = 28401120L + i * 40L + rnd.nextInt(3)
+      Seq.fill(1 + rnd.nextInt(3))(("A", m)) ++
+        (if (i % 3 == 0) Seq(("B", m + 1L)) else Nil)
     }
-    val exact = run("ttl_eq_exact",
-      ev => AnomalyStream.zScores(ev, trailing = 3))
-    val ttl = run("ttl_eq_ttl",
-      ev => AnomalyStreamTtl.zScores(ev, trailing = 3,
-        keepMinutes = 10000L))
-    assert(ttl === exact, s"ttl=$ttl\nexact=$exact")
-    assert(ttl.nonEmpty)
+    val shuffled = rnd.shuffle(events)
+    val got = drainBatches("q112_dials_out",
+      shuffled.grouped(shuffled.size / 4 + 1).toSeq,
+      graft.queries.StreamingQueries.q112Monitor)
+    val batch = batchZ(events, trailing = 30)
+    assert(events.map(_._2).max - events.map(_._2).min > 7L * 1440L)
+    assert(got.size === batch.size && got === batch,
+      s"drained ${got.size} rows vs batch ${batch.size}")
   }
 
   test("retention prune + late drop: below-horizon events are " +
@@ -51,7 +85,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long)]
     // keepMinutes=6, trailing=3: a span reaching minute 9 trusts [4, 9]
-    val out = AnomalyStreamTtl.zScores(input.toDF().toDF("key", "m"),
+    val out = AnomalyStream.zScores(input.toDF().toDF("key", "m"),
       trailing = 3, keepMinutes = 6L)
     val q = out.toDF().writeStream.format("memory")
       .queryName("ttl_prune_out").outputMode("append").start()
@@ -83,8 +117,8 @@ class AnomalyStreamTtlSpec extends SparkSpec {
         .agg(max($"seen")).as[Long].head()
       assert(seenAfter === seenBefore, "dropped event still bumped seen")
       // retention-exactness: every emitted row for the POST-PRUNE
-      // minutes equals the exact twin computed over the span the
-      // variant retained ([4..9] with known-zero fill)
+      // minutes equals the batch z-scores computed over the span the
+      // operator retained ([4..9] with known-zero fill)
       val twin = graft.operators.Anomaly.rateZScores(
           (Seq(4L, 5L).flatMap(m => Seq.fill(2)(m)) ++ Seq(8L, 9L))
             .map(m => ("A", new java.sql.Timestamp(m * 60000L)))
@@ -102,13 +136,13 @@ class AnomalyStreamTtlSpec extends SparkSpec {
       "tombstone; a late event past TTL re-opens NOTHING; a fresh " +
       "event re-warms from scratch") {
     val ttl = Some(java.time.Duration.ofMinutes(5))
-    val f = AnomalyStreamTtl.fn(trailing = 3, keepMinutes = 100L, ttl) _
+    val f = AnomalyStream.fn(trailing = 3, keepMinutes = 100L, ttl) _
 
     // live state: key A with minutes 0..5 (two events each), horizon 0
-    val live = TtlState((0L to 5L).map(_ -> 2L).toMap, 0L, 12L)
+    val live = KeyState((0L to 5L).map(_ -> 2L).toMap, 0L, 12L)
 
     // 1. the timeout invocation: state decays to the tombstone
-    val tState = TestGroupState.create[TtlState](
+    val tState = TestGroupState.create[KeyState](
       Optional.of(live), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], true)
     assert(f("A", Iterator.empty, tState).isEmpty)
@@ -119,7 +153,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
 
     // 2. a late event for the dead span (minute 4 < horizon 6): dropped,
     // state untouched except the re-armed TTL, zero emissions
-    val s2 = TestGroupState.create[TtlState](
+    val s2 = TestGroupState.create[KeyState](
       Optional.of(tomb), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], false)
     assert(f("A", Iterator(MinuteEvent("A", 4L)), s2).isEmpty)
@@ -128,7 +162,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
 
     // 3. fresh events start a NEW span that warms up from scratch:
     // minutes 10..12 (span 3 = trailing) score nothing yet...
-    val s3 = TestGroupState.create[TtlState](
+    val s3 = TestGroupState.create[KeyState](
       Optional.of(tomb), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], false)
     val warm = f("A", (10L to 12L).iterator.map(MinuteEvent("A", _)), s3)
@@ -136,7 +170,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     val s3v = s3.get
     assert(s3v.horizon === 10L && s3v.seen === 15L)
     // ...and minute 13 completes the first full window → exactly one row
-    val s4 = TestGroupState.create[TtlState](
+    val s4 = TestGroupState.create[KeyState](
       Optional.of(s3v), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], false)
     val scored = f("A", Iterator(MinuteEvent("A", 13L)), s4).toSeq
@@ -147,10 +181,10 @@ class AnomalyStreamTtlSpec extends SparkSpec {
       "key: the next genuine event dies LOUDLY instead of dropping " +
       "as 'late' forever") {
     val ttl = Option.empty[java.time.Duration]
-    val f = AnomalyStreamTtl.fn(trailing = 3, keepMinutes = 100L, ttl) _
+    val f = AnomalyStream.fn(trailing = 3, keepMinutes = 100L, ttl) _
     // a corrupt year-9999 minute poisons the horizon...
-    val s1 = TestGroupState.create[TtlState](
-      Optional.of(TtlState(Map(1000L -> 2L), 1000L, 2L)),
+    val s1 = TestGroupState.create[KeyState](
+      Optional.of(KeyState(Map(1000L -> 2L), 1000L, 2L)),
       GroupStateTimeout.NoTimeout, 1000L, Optional.empty[Long], false)
     // (the corrupt event itself scores its own pruned span — the
     // emissions are a symptom; the poisoned HORIZON is the issue)
@@ -159,7 +193,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(poisoned.horizon === 5000000000L - 99L)
     // ...and the next REAL event (minute ~1001, billions below the
     // horizon) must fail loudly, not vanish
-    val s2 = TestGroupState.create[TtlState](
+    val s2 = TestGroupState.create[KeyState](
       Optional.of(poisoned), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     val e = intercept[IllegalArgumentException] {
@@ -168,8 +202,8 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(e.getMessage.contains("corrupt timestamp"), e.getMessage)
     // merely-late events (within keepMinutes of the horizon) still
     // drop SILENTLY — the documented under-report class
-    val s3 = TestGroupState.create[TtlState](
-      Optional.of(TtlState(Map(500L -> 1L), 450L, 1L)),
+    val s3 = TestGroupState.create[KeyState](
+      Optional.of(KeyState(Map(500L -> 1L), 450L, 1L)),
       GroupStateTimeout.NoTimeout, 1000L, Optional.empty[Long], false)
     assert(f("A", Iterator(MinuteEvent("A", 400L)), s3).isEmpty)
     assert(!s3.isUpdated)
@@ -178,26 +212,24 @@ class AnomalyStreamTtlSpec extends SparkSpec {
   test("a DECAY-set horizon carries no corruption bound: a producer " +
       "offline past keepMinutes flushing its buffer drops silently " +
       "(counted), never crash-loops the query") {
-    val acc = spark.sparkContext.longAccumulator("ttl_dropped")
-    val f = AnomalyStreamTtl.fn(trailing = 3, keepMinutes = 100L,
-      Option.empty[java.time.Duration], Some(acc)) _
+    val f = AnomalyStream.fn(trailing = 3, keepMinutes = 100L,
+      Option.empty[java.time.Duration]) _
     // idle decay left a tombstone at horizon 100000 (decayed = true);
     // the producer's flushed buffer is WEEKS below it — under the
     // live-data rule (100000 - 1000 ≫ keepMinutes=100) this would
     // require-fail and, on checkpoint replay, fail again forever
-    val tomb = TtlState(Map.empty, 100000L, 50L, decayed = true)
-    val s1 = TestGroupState.create[TtlState](
+    val tomb = KeyState(Map.empty, 100000L, 50L, decayed = true)
+    val s1 = TestGroupState.create[KeyState](
       Optional.of(tomb), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     assert(f("A", (1000L to 1002L).iterator.map(MinuteEvent("A", _)),
       s1).isEmpty)
     assert(!s1.isUpdated && !s1.isRemoved,
       "a dropped flush must not touch the tombstone")
-    assert(acc.value === 3L, "each dropped event must be counted")
     // but the SAME distance below a LIVE horizon still dies loudly —
     // the decay flag narrows the require, it does not remove it
-    val live = TtlState(Map(100000L -> 1L), 100000L, 1L)
-    val s2 = TestGroupState.create[TtlState](
+    val live = KeyState(Map(100000L -> 1L), 100000L, 1L)
+    val s2 = TestGroupState.create[KeyState](
       Optional.of(live), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     val e = intercept[IllegalArgumentException] {
@@ -206,7 +238,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(e.getMessage.contains("corrupt timestamp"), e.getMessage)
     // and an accepted batch on top of a tombstone resets the flag:
     // the new span's horizon is live-set again
-    val s3 = TestGroupState.create[TtlState](
+    val s3 = TestGroupState.create[KeyState](
       Optional.of(tomb), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     f("A", Iterator(MinuteEvent("A", 100005L)), s3).toList
@@ -215,7 +247,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
 
   test("guards: keepMinutes must exceed trailing") {
     intercept[IllegalArgumentException] {
-      AnomalyStreamTtl.zScores(
+      AnomalyStream.zScores(
         Seq(("A", 1L)).toDF("key", "m"), trailing = 30, keepMinutes = 30L)
     }
   }

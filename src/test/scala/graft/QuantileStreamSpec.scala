@@ -11,8 +11,12 @@ class QuantileStreamSpec extends SparkSpec {
       "emitted windows; drained max-seen ≡ the batch twin") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long)]
+    // event time one second into the window: nothing is late (an
+    // epoch-0 time would sit ON the initial watermark and drop),
+    // nothing closes
     val out = QuantileStream.quantiles(
-      input.toDF().toDF("key", "w", "qv"), pcts = Seq(50, 95))
+      input.toDF().toDF("key", "w", "qv")
+        .withColumn("ts", timestamp_seconds($"w" + 1)), pcts = Seq(50, 95))
     val q = out.toDF().writeStream.format("memory")
       .queryName("qstream_out").outputMode("append").start()
     try {
@@ -39,59 +43,96 @@ class QuantileStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Batch reference: q117's `WindowedQuantiles.quantiles` at hour
+    * grain over (key, ts, v), as (key, window start µs, pct, n, est). */
+  private def batchQuantiles(raw: Seq[(String, java.sql.Timestamp, Double)]) =
+    graft.operators.WindowedQuantiles.quantiles(
+        raw.toDF("k", "ts", "v"), "k", "ts", "v", "hour", Seq(50, 95))
+      .select($"key", unix_micros($"window_start").as("wus"),
+        $"pct", $"n", $"est")
+      .as[(String, Long, Long, Long, Double)].collect().toSet
+
+  /** Drains `raw` through `mk` in `nBatches` shuffled micro-batches;
+    * returns the max-`seen` rows in [[batchQuantiles]]' shape. */
+  private def drainShuffled(name: String,
+      raw: Seq[(String, java.sql.Timestamp, Double)], nBatches: Int,
+      seed: Long, mk: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.Dataset[QuantileStream.QRow]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, Long, Double)]
+    val ev = input.toDF().toDF("key", "ts_us", "v")
+      .select($"key", expr("ts_us div 3600000000 * 3600").as("w"),
+        graft.operators.WindowedQuantiles.quantizedValue($"v").as("qv"),
+        timestamp_micros($"ts_us").as("ts"))
+    val q = mk(ev).toDF().writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      // shuffled batches — exactness must not depend on order
+      val shuffled = new scala.util.Random(seed).shuffle(
+        raw.map { case (k, ts, v) => (k, ts.getTime * 1000L, v) })
+      shuffled.grouped(shuffled.size / nBatches + 1).foreach { b =>
+        input.addData(b: _*); q.processAllAvailable()
+      }
+    } finally q.stop()
+    spark.table(name)
+      .groupBy($"key", $"w", $"pct")
+      .agg(max_by(struct($"n", $"est"), $"seen").as("f"))
+      .select($"key", ($"w" * 1000000L).as("wus"),
+        $"pct".cast("long"), $"f.n".as("n"), $"f.est".as("est"))
+      .as[(String, Long, Long, Long, Double)].collect().toSet
+  }
+
   test("drained stream ≡ batch operator on a multi-window multi-key " +
       "corpus (the q118 contract at spec scale)") {
-    implicit val sqlCtx = spark.sqlContext
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 08:00:00").getTime
     val raw = (0 until 200).map { i =>
       (s"k${i % 3}", new java.sql.Timestamp(t0 + (i % 7) * 3600000L),
         (i * 37 % 50) / 10.0 - 1.5)
     }
-    val batch = graft.operators.WindowedQuantiles.quantiles(
-        raw.toDF("k", "ts", "v"), "k", "ts", "v", "hour", Seq(50, 95))
-      .select($"key", unix_micros($"window_start").as("wus"),
-        $"pct", $"n", $"est")
-      .as[(String, Long, Long, Long, Double)].collect().toSet
-    val input = MemoryStream[(String, Long, Double)]
-    val ev = input.toDF().toDF("key", "ts_us", "v")
-      .select($"key", expr("ts_us div 3600000000 * 3600").as("w"),
-        graft.operators.WindowedQuantiles.quantizedValue($"v").as("qv"))
-    val out = QuantileStream.quantiles(ev, pcts = Seq(50, 95))
-    val q = out.toDF().writeStream.format("memory")
-      .queryName("qstream_eq_out").outputMode("append").start()
-    try {
-      // three shuffled batches — exactness must not depend on order
-      val shuffled = scala.util.Random.shuffle(
-        raw.map { case (k, ts, v) => (k, ts.getTime * 1000L, v) }.toList)
-      shuffled.grouped(70).foreach { b =>
-        input.addData(b: _*); q.processAllAvailable()
-      }
-      val drained = spark.table("qstream_eq_out")
-        .groupBy($"key", $"w", $"pct")
-        .agg(max_by(struct($"n", $"est"), $"seen").as("f"))
-        .select($"key", ($"w" * 1000000L).as("wus"),
-          $"pct".cast("long"), $"f.n".as("n"), $"f.est".as("est"))
-        .as[(String, Long, Long, Long, Double)].collect().toSet
-      assert(drained === batch,
-        s"drained=${drained.toSeq.sortBy(t => (t._1, t._2, t._3))}\n" +
-          s"batch=${batch.toSeq.sortBy(t => (t._1, t._2, t._3))}")
-    } finally q.stop()
+    // lateness covers the 7-hour span, so no shuffled event is late
+    val drained = drainShuffled("qstream_eq_out", raw, 3, 42L,
+      ev => QuantileStream.quantiles(ev, pcts = Seq(50, 95),
+        allowedLateness = java.time.Duration.ofHours(8)))
+    val batch = batchQuantiles(raw)
+    assert(drained === batch,
+      s"drained=${drained.toSeq.sortBy(t => (t._1, t._2, t._3))}\n" +
+        s"batch=${batch.toSeq.sortBy(t => (t._1, t._2, t._3))}")
+  }
+
+  test("q118's dials keep the drained quantiles exact over a shuffled " +
+      "multi-batch feed spanning 30 days") {
+    // 3 keys × 600 readings at random instants over 30 days (past any
+    // 7-day lateness), delivered in 4 shuffled batches
+    val rnd = new scala.util.Random(118)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val span = 30L * 86400000L
+    val raw = (0 until 1800).map { i =>
+      (s"k${i % 3}",
+        new java.sql.Timestamp(t0 + (rnd.nextDouble() * span).toLong),
+        rnd.nextInt(400) / 10.0 - 5.0)
+    }
+    val drained = drainShuffled("q118_dials_out", raw, 4, 118L,
+      graft.queries.StreamingQueries.q118Monitor)
+    val batch = batchQuantiles(raw)
+    assert(raw.map(_._2.getTime).max - raw.map(_._2.getTime).min >
+      7L * 86400000L)
+    assert(drained.size === batch.size && drained === batch,
+      s"drained ${drained.size} rows vs batch ${batch.size}")
   }
 
   test("TTL variant: the watermark CLOSES a window to a tombstone; a " +
       "post-close straggler re-opens nothing and the pre-close answer " +
       "stays the max-seen winner") {
-    import graft.streaming.QuantileStreamTtl
     implicit val sqlCtx = spark.sqlContext
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     val input = MemoryStream[(String, Long, Long, java.sql.Timestamp)]
-    // 60-second windows, zero lateness, 0-second watermark delay: the
-    // close fires as soon as the watermark passes the window end
-    val out = QuantileStreamTtl.quantiles(
+    // 60-second windows, zero lateness (so a 0-second watermark
+    // delay): the close fires as soon as the watermark passes the
+    // window end
+    val out = QuantileStream.quantiles(
       input.toDF().toDF("key", "w", "qv", "ts"), pcts = Seq(50),
       windowSeconds = 60L,
-      allowedLateness = java.time.Duration.ZERO,
-      watermarkDelay = "0 seconds")
+      allowedLateness = java.time.Duration.ZERO)
     val q = out.toDF().writeStream.format("memory")
       .queryName("qttl_out").outputMode("append").start()
     try {
@@ -130,19 +171,18 @@ class QuantileStreamSpec extends SparkSpec {
       "actually drops (the engine's late filter can't be the only " +
       "defense), and a stale-window/fresh-ts poison event finalizes " +
       "instead of arming a behind-watermark timeout") {
-    import graft.streaming.QuantileStreamTtl
-    import graft.streaming.QuantileStreamTtl.{QTtlState, TsQEvent}
+    import graft.streaming.QuantileStream.{QEvent, QState}
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val f = QuantileStreamTtl.fn(Seq(50), 1000L, windowSeconds = 60L,
+    val f = QuantileStream.fn(Seq(50), 1000L, windowSeconds = 60L,
       latenessMillis = 0L) _
     def ev(w: Long, qv: Long) =
-      TsQEvent("A", w, qv, new java.sql.Timestamp(0L))
+      QEvent("A", w, qv, new java.sql.Timestamp(0L))
     // 1. a CLOSED tombstone drops an arriving twin — this is the
     // in-function guarantee, independent of Spark's event-time filter
     // (which only vets ts, not w)
-    val closed = QTtlState(Map.empty, 7L, closed = true)
-    val s1 = TestGroupState.create[QTtlState](
+    val closed = QState(Map.empty, 7L, closed = true)
+    val s1 = TestGroupState.create[QState](
       Optional.of(closed), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false)
     assert(f(("A", 0L), Iterator(ev(0L, 5L)), s1).isEmpty)
@@ -151,8 +191,8 @@ class QuantileStreamSpec extends SparkSpec {
     // stale its close time is behind the watermark, NO prior state —
     // arming the timeout would throw and crash-loop the query; the
     // group must finalize to a tombstone and emit nothing
-    val s2 = TestGroupState.create[QTtlState](
-      Optional.empty[QTtlState], GroupStateTimeout.EventTimeTimeout,
+    val s2 = TestGroupState.create[QState](
+      Optional.empty[QState], GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false) // watermark 500 s >> close 60 s
     assert(f(("A", 0L), Iterator(ev(0L, 5L)), s2).isEmpty)
     val tomb = s2.get
@@ -161,15 +201,15 @@ class QuantileStreamSpec extends SparkSpec {
     assert(!s2.getTimeoutTimestampMs.isPresent,
       "no timeout may be armed behind the watermark")
     // 3. the timeout path itself: open state collapses to the tombstone
-    val open = QTtlState(Map(10L -> 2L), 2L, closed = false)
-    val s3 = TestGroupState.create[QTtlState](
+    val open = QState(Map(10L -> 2L), 2L, closed = false)
+    val s3 = TestGroupState.create[QState](
       Optional.of(open), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), true)
     assert(f(("A", 0L), Iterator.empty, s3).isEmpty)
-    assert(s3.get === QTtlState(Map.empty, 2L, closed = true))
+    assert(s3.get === QState(Map.empty, 2L, closed = true))
     // 4. negative lateness is rejected up front
     intercept[IllegalArgumentException] {
-      QuantileStreamTtl.quantiles(
+      QuantileStream.quantiles(
         Seq(("A", 0L, 1L, new java.sql.Timestamp(0L)))
           .toDF("key", "w", "qv", "ts"),
         allowedLateness = java.time.Duration.ofMinutes(-1))
@@ -180,7 +220,9 @@ class QuantileStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long)]
     val out = QuantileStream.quantiles(
-      input.toDF().toDF("key", "w", "qv"), pcts = Seq(50), maxDistinct = 2L)
+      input.toDF().toDF("key", "w", "qv")
+        .withColumn("ts", timestamp_seconds($"w" + 1)),
+      pcts = Seq(50), maxDistinct = 2L)
     val q = out.toDF().writeStream.format("memory")
       .queryName("qstream_guard_out").outputMode("append").start()
     try {
@@ -192,7 +234,8 @@ class QuantileStreamSpec extends SparkSpec {
     } finally q.stop()
     intercept[IllegalArgumentException] {
       QuantileStream.quantiles(
-        Seq(("A", 0L, 1L)).toDF("key", "w", "qv"), pcts = Seq(0))
+        Seq(("A", 0L, 1L, new java.sql.Timestamp(0L)))
+          .toDF("key", "w", "qv", "ts"), pcts = Seq(0))
     }
   }
 }
